@@ -434,8 +434,9 @@ def _er_summary(run: dict) -> dict:
 def run_cc_at_size(spark) -> dict:
     """Distributed connected components at size (round-3 VERDICT #4):
     ≥1M synthetic chain edges through the large-star/small-star loop
-    (local DSU cutover disabled), wall + round count recorded. Long
-    chains bound the expected rounds at ~log2(chain length)."""
+    (single-task union-find cutover disabled), wall + round count
+    recorded. Long chains bound the expected rounds at ~log2(chain
+    length)."""
     from entity_resolution__spark.data.synth import make_chain_edges
     from entity_resolution__spark.operators.cluster import connected_components
 

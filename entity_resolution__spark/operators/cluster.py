@@ -1,22 +1,31 @@
-"""Distributed connected components: large-star / small-star join loop.
+"""Connected components over match edges: root = min member.
 
-Replaces the reference's single-process union-find
-(/root/reference/scripts/apply_transitivity.py:21-45) with the
-alternating-star algorithm of Kiveris et al., "Connected Components in
-MapReduce and Beyond" (SoCC'14): O(log^2 n) rounds worst case, ~log n in
-practice, each round a pair of shuffles keyed on node id. Node ids are
-any orderable type (we use conv_id strings; lexicographic order is the
-total order).
+The reference clusters with a single-process union-find
+(scripts/apply_transitivity.py:21-45). Here `_min_roots` is the one
+union-find in the package and `_forest` runs it inside executor tasks
+(mapInPandas), so no edge row reaches the driver. `connected_components`
+picks one of two plans from the input size:
+
+- at most ``local_threshold`` edges: ONE task runs `_forest` over the
+  whole edge set, which is the exact global assignment;
+- more edges, or per-iteration snapshots requested: every partition's
+  `_forest` collapses its edges to min-root stars, and the alternating
+  large-star / small-star loop of Kiveris et al., "Connected Components
+  in MapReduce and Beyond" (SoCC'14) joins the partition-local
+  components: O(log^2 n) rounds worst case, ~log n in practice.
+
+Node ids are any orderable type (we use conv_id strings; lexicographic
+order is the total order).
 
 Scale notes:
-- Each iteration is groupBy(node).min + join — both shuffle on the node
-  key; AQE handles stragglers, and the star-contraction itself removes
-  high-degree hubs after round 1 (a hub's neighbors all rewire to the
-  component min), so degree skew self-heals.
+- Each star step is one window over the node key (one shuffle); the
+  star contraction itself removes high-degree hubs after round 1 (a
+  hub's neighbors all rewire to the component min), so degree skew
+  self-heals.
 - Lineage is cut every iteration via localCheckpoint() (on a cluster:
   per-iteration Iceberg snapshot through plans.checkpoint.StageStore),
   otherwise the plan tree grows exponentially.
-- Convergence is detected by an edge-set fingerprint (count + xor/sum of
+- Convergence is detected by an edge-set fingerprint (count + bit_xor of
   per-edge hashes) — one tiny aggregate per round, no collect of edges.
 """
 
@@ -26,16 +35,6 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def _symmetric(edges: DataFrame) -> DataFrame:
-    """(src,dst) undirected edge list → both-direction (u,v), no self-loops."""
-    e = edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-    return (
-        e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
 
 
 def _resym(e: DataFrame) -> DataFrame:
@@ -105,17 +104,13 @@ class CCResult:
     fingerprints: list[tuple[int, int]] = field(default_factory=list)
 
 
-def _local_dsu_components(edges: DataFrame, _edges_pdf=None) -> DataFrame:
-    """Driver-side union-find for SMALL edge sets (same output contract
-    as the distributed loop: root = min member). Iterative find with
-    path halving; min-root maintained by always attaching the larger id
-    under the smaller — independently structured from the reference's
-    recursive rank-union DSU (apply_transitivity.py:21-45).
+def _min_roots(pairs) -> dict:
+    """Union-find over (a, b) pairs → {node: min member of its set}.
 
-    `_edges_pdf`: the caller may pass the already-fetched pandas edge
-    frame (connected_components' size probe now IS the fetch) so the
-    transfer is not paid twice; `edges` still supplies schema/session.
-    """
+    Iterative find with path compression; the min root is kept by always
+    attaching the larger root under the smaller — independently
+    structured from the reference's recursive rank-union DSU
+    (apply_transitivity.py:21-45), which tests/oracle.DSU mirrors."""
     parent: dict = {}
 
     def find(x):
@@ -126,122 +121,61 @@ def _local_dsu_components(edges: DataFrame, _edges_pdf=None) -> DataFrame:
             parent[x], x = r, parent[x]
         return r
 
-    # Arrow transfer both ways. Round-5 A/B at 100k string edges,
-    # local[8]: Row collect 0.47s → toPandas 0.18s, find-loop 0.18s →
-    # 0.06s (numpy array iteration vs Row __getitem__), tuple-list
-    # createDataFrame 0.87s → from-pandas 0.56s; leg total 1.52s →
-    # 0.79s (−48%). Same output, same contract.
-    # Null endpoints are dropped BEFORE the transfer (round-5 ADVICE):
-    # pandas widens an integer column containing any null to float64,
-    # silently corrupting node ids (NaN dict keys; precision loss above
-    # 2^53) where the old Row path surfaced None. A null endpoint is a
-    # malformed edge on either path — excluding it matches the
-    # distributed loop, whose u>v / u!=v comparisons drop nulls too.
-    pdf = _edges_pdf
-    if pdf is None:
-        pdf = edges.select("src", "dst").na.drop(subset=["src", "dst"]).toPandas()
-    import pandas.api.types as _pt
-    from pyspark.sql import types as T
-
-    for c in ("src", "dst"):
-        if _pt.is_float_dtype(pdf[c]) and not isinstance(
-            edges.schema[c].dataType, (T.FloatType, T.DoubleType)
-        ):
-            # belt-and-braces: no nulls remain, so a float dtype for an
-            # integral Spark type means the Arrow path changed — fail
-            # fast rather than hand NaN/lossy ids to the DSU
-            raise TypeError(
-                f"_local_dsu_components: column {c!r} arrived as "
-                f"{pdf[c].dtype} for Spark type {edges.schema[c].dataType}"
-            )
-    # .tolist(), not .to_numpy(): the loop hashes every endpoint into
-    # the parent dict, and numpy scalar boxing + np.int64.__hash__ make
-    # that ~3× slower than native python ints (measured at 1.05M edges:
-    # 10.7 s → 3.4 s; strings are object-dtype either way). A
-    # numpy-vectorized CC (minimum.at relax + pointer doubling) was
-    # prototyped and measured SLOWER (13.5 s — unbuffered ufunc.at
-    # scatter), so the scalar DSU stays.
-    for a, b in zip(pdf["src"].tolist(), pdf["dst"].tolist()):
+    for a, b in pairs:
         ra, rb = find(a), find(b)
         if ra != rb:
             lo, hi = (ra, rb) if ra < rb else (rb, ra)
             parent[hi] = lo
+    return {n: find(n) for n in parent}
 
+
+def _forest(edges: DataFrame) -> DataFrame:
+    """(src, dst) → (node, root): `_min_roots` over each partition's
+    edges, one row per node seen, root = min member of its
+    partition-local component.
+
+    Over ONE partition that is the exact global assignment. Over many,
+    the non-root rows are a spanning forest of each partition's
+    components: connectivity-equivalent to the input but with diameter
+    ≤ 2 per partition-component, so the star loop fed with them needs
+    ~log(cross-partition path length) rounds instead of ~log(graph
+    diameter) — 11 rounds became 3 on 1.05M chain edges. Null endpoints
+    must be dropped by the caller."""
     import pandas as pd
-
-    nodes = list(parent)
-    out = pd.DataFrame({"node": nodes, "root": [find(n) for n in nodes]})
-    spark = edges.sparkSession
+    import pandas.api.types as pt
     from pyspark.sql import types as T
 
-    node_type = edges.schema["src"].dataType
+    spark_types = {c: edges.schema[c].dataType for c in ("src", "dst")}
+
+    def pairs(batches):
+        for pdf in batches:
+            for c, dt in spark_types.items():
+                if pt.is_float_dtype(pdf[c]) and not isinstance(
+                    dt, (T.FloatType, T.DoubleType)
+                ):
+                    # no nulls remain, so a float dtype for an integral
+                    # Spark type means the Arrow path changed — fail fast
+                    # rather than hand NaN/lossy ids to the union-find
+                    raise TypeError(
+                        f"_forest: column {c!r} arrived as {pdf[c].dtype} "
+                        f"for Spark type {dt}"
+                    )
+            # .tolist(), not .to_numpy(): the union-find hashes every
+            # endpoint, and numpy scalar boxing + np.int64.__hash__ make
+            # that ~3× slower than native python ints (measured at 1.05M
+            # edges: 10.7 s → 3.4 s; strings are object-dtype either way)
+            yield from zip(pdf["src"].tolist(), pdf["dst"].tolist())
+
+    def kernel(batches):
+        roots = _min_roots(pairs(batches))
+        if roots:
+            yield pd.DataFrame({"node": list(roots), "root": list(roots.values())})
+
+    node_type = spark_types["src"]
     schema = T.StructType(
         [T.StructField("node", node_type), T.StructField("root", node_type)]
     )
-    if out.empty:
-        return spark.createDataFrame([], schema)
-    res = spark.createDataFrame(out, schema)
-    if len(out) > 200_000:
-        # a LocalRelation this size is re-serialized from the driver on
-        # EVERY downstream job — assign_clusters alone runs 3+ jobs over
-        # it (size agg, dense-id collect, stage materialization), ~4.4 s
-        # per rescan at 1M string rows. Distribute once into executor
-        # blocks and cut the lineage; below the gate the relation is
-        # cheap enough that the extra shuffle would be pure overhead.
-        res = res.repartition(
-            spark.sparkContext.defaultParallelism
-        ).localCheckpoint(eager=True)
-    return res
-
-
-def _local_forest_edges(edges: DataFrame) -> DataFrame:
-    """Partition-local union-find pre-pass (round-6 VERDICT #1, the
-    two-level CC): each task runs the DSU over ITS partition's edges and
-    emits that partition's components as min-root star edges
-    (node → local_root, one per non-root member). The union of these
-    per-partition spanning stars is connectivity-EQUIVALENT to the
-    input (each partition's edge set is replaced by a spanning forest of
-    the same local components), so the global star loop computes the
-    identical (node, min-root) assignment — but its input now has
-    diameter ≤ 2 per partition-component, so rounds collapse to
-    ~log(cross-partition path length) instead of ~log(graph diameter),
-    and on dense graphs the edge count shrinks toward |V|. At the
-    1.05M-chain-edge cc_atsize shape this replaced 11 star rounds with
-    3. No driver state: the DSU runs inside mapInPandas per task."""
-    import pandas as pd
-
-    schema = edges.schema
-
-    def forest(pdf_iter):
-        parent: dict = {}
-
-        def find(x):
-            r = parent.setdefault(x, x)
-            while parent[r] != r:
-                r = parent[r]
-            while parent[x] != r:
-                parent[x], x = r, parent[x]
-            return r
-
-        for pdf in pdf_iter:
-            for a, b in zip(pdf["src"].tolist(), pdf["dst"].tolist()):
-                ra, rb = find(a), find(b)
-                if ra != rb:
-                    lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                    parent[hi] = lo
-        nodes = list(parent)
-        roots = [find(n) for n in nodes]
-        out = pd.DataFrame(
-            {
-                "src": [n for n, r in zip(nodes, roots) if n != r],
-                "dst": [r for n, r in zip(nodes, roots) if n != r],
-            }
-        )
-        if out.empty:
-            return
-        yield out
-
-    return edges.select("src", "dst").mapInPandas(forest, schema)
+    return edges.mapInPandas(kernel, schema)
 
 
 def connected_components(
@@ -249,64 +183,54 @@ def connected_components(
     max_iter: int = 50,
     on_iteration=None,
     local_threshold: int = 2_000_000,
-    local_forest: bool = True,
 ) -> CCResult:
     """edges(src, dst) → (node, root) where root = min member of component.
 
-    Nodes appearing only as isolated (no edges) are the caller's concern —
-    union them in afterwards (see `assign_clusters`). ``on_iteration`` is
-    an optional callback (it, edges_df, fingerprint) used by the
-    checkpointing layer to commit per-iteration snapshots (north_rule:
-    cluster-iteration resumability).
+    Only ``src`` and ``dst`` are read; self-loops and null endpoints are
+    dropped. Nodes appearing only as isolated (no edges) are the
+    caller's concern — union them in afterwards (see `assign_clusters`).
+    ``on_iteration`` is an optional callback (it, edges_df, fingerprint)
+    used by the checkpointing layer to commit per-iteration snapshots
+    (north_rule: cluster-iteration resumability).
 
     Size-adaptive execution, same spirit as Spark choosing broadcast
-    over sort-merge: an edge set under ``local_threshold`` is solved by
-    a driver-side union-find (one pass, one job) instead of paying
-    2 + 2·rounds job barriers of the star loop — at 20k edges the loop
-    is pure fixed overhead (~10 s of scheduling for <1 s of compute),
-    and at 1.05M edges the DSU still wins 4-13× (3.4-10.7 s vs 41.6 s:
-    the star loop's per-iteration barriers don't shrink with edge
-    count, which is also why the clusters stage scaled at 0.27 in the
-    round-6 4.3M-turn pair). The 2M default bounds the collect at
-    ~200 MB for string node ids against a 56g driver — the same
-    adaptive-threshold idiom as Spark's autoBroadcastJoinThreshold
-    (ADVICE round 2 flagged 2M × cohort-qualified composite keys as
-    multi-GB; those callers pass a lower threshold or dense int keys).
-    The distributed loop remains the 100 TB scale path and is FORCED
-    whenever per-iteration snapshots are requested (``on_iteration``
-    set) or ``local_threshold=0``. Both paths produce identical
-    (node, root) assignments (root = min member); tests assert parity —
-    self-loop edges are dropped up front on BOTH paths (the star loop's
-    u>v filter would otherwise drop them only on the distributed path).
+    over sort-merge: an edge set of at most ``local_threshold`` edges is
+    solved by one executor task running the union-find over all of it
+    (``iterations == 0``) — a size probe and one kernel job instead of
+    the star loop's 2 + 2·rounds job barriers, which do not shrink with
+    edge count (at 20k edges the loop is pure scheduling overhead). The
+    threshold bounds that one Python worker's union-find state; callers
+    with wide node keys pass a lower value. Larger inputs take the
+    distributed path: per-partition forests, then the star loop, which
+    is also FORCED when ``on_iteration`` is set or ``local_threshold=0``.
+    Both paths produce identical (node, root) assignments; tests assert
+    parity.
     """
-    # Materialize the input edge list FIRST (one job): both the local
-    # fast path (count + collect) and the star loop (_symmetric unions
-    # the edges with their reverse — two branches that would otherwise
-    # each recompute the full upstream lineage, double-running the
-    # feature UDF stage) read it more than once.
-    edges = edges.filter(F.col("src") != F.col("dst")).localCheckpoint(eager=True)
-    if on_iteration is None and local_threshold > 0:
-        # the size probe IS the fetch: one bounded Arrow transfer
-        # (limit caps driver bytes exactly like the old count probe
-        # capped the decision) replaces the separate count job + full
-        # toPandas — one job fewer per CC call on the fast path
-        probe_pdf = (
-            edges.select("src", "dst")
-            .na.drop(subset=["src", "dst"])
-            .limit(local_threshold + 1)
-            .toPandas()
-        )
-        if len(probe_pdf) <= local_threshold:
-            assign = _local_dsu_components(edges, _edges_pdf=probe_pdf)
-            return CCResult(assignments=assign, iterations=0, fingerprints=[])
-    if local_forest:
-        # two-level path: collapse each partition to its spanning stars
-        # before the global loop (connectivity-equivalent input — see
-        # _local_forest_edges; the (node, root) result is identical)
-        edges = _local_forest_edges(edges).localCheckpoint(eager=True)
+    # Materialize the input edge list FIRST (one job): the size probe
+    # and the kernel both read it, and without the cut each would
+    # recompute the full upstream lineage (the feature UDF stage).
+    # `!=` is null-rejecting, so null endpoints go with the self-loops —
+    # before Arrow, where one null widens an integer column to float64.
+    edges = (
+        edges.select("src", "dst")
+        .filter(F.col("src") != F.col("dst"))
+        .localCheckpoint(eager=True)
+    )
+    if (
+        on_iteration is None
+        and local_threshold > 0
+        and edges.limit(local_threshold + 1).count() <= local_threshold
+    ):
+        # checkpointed: assign_clusters runs several jobs over the result
+        assign = _forest(edges.coalesce(1)).localCheckpoint(eager=True)
+        return CCResult(assignments=assign, iterations=0)
+    # forest rows point from a node to its smaller partition-local root,
+    # which is already the loop's canonical directed form (u > v)
     e = (
-        _symmetric(edges)
-        .filter(F.col("u") > F.col("v"))  # canonical directed form
+        _forest(edges)
+        .filter(F.col("node") != F.col("root"))
+        .select(F.col("node").alias("u"), F.col("root").alias("v"))
+        .distinct()
         .localCheckpoint(eager=True)
     )
     # prev_fp starts unknown (saves one aggregate job): the loop always
@@ -395,8 +319,8 @@ def cohort_transitive_clusters(seed: DataFrame, max_iter: int = 50) -> DataFrame
         F.concat_ws(_COHORT_SEP, "cohort", "v").alias("dst"),
     )
     # composite "cohort|node" string keys are several× wider than the
-    # ER pipeline's conv_ids — keep this caller at the old 500k collect
-    # bound rather than the raised 2M default (ADVICE round 2)
+    # ER pipeline's conv_ids — a lower single-task bound keeps the one
+    # Python worker's union-find state near the 2M default's footprint
     cc = connected_components(q, max_iter=max_iter, local_threshold=500_000)
     asn = cc.assignments.select(
         F.split_part(F.col("node"), F.lit(_COHORT_SEP), F.lit(1)).alias("cohort"),

@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from entity_resolution__spark.operators.cluster import _min_roots
+
 
 def _sym(edges: DataFrame) -> DataFrame:
     e = edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
@@ -283,13 +285,7 @@ def refine_communities(
         if c1 != c2:
             inter[(c1, c2)] = inter.get((c1, c2), 0.0) + w
     # greedy merge: relabel to min community id, union-find over merges
-    parent: dict = {c: c for c in deg}
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
+    merges: list = []
 
     # Max-heap with lazy invalidation (round-4 ADVICE: the previous
     # full re-sort of `inter` per merge was O(merges × E log E) driver
@@ -330,7 +326,7 @@ def refine_communities(
         if -ndq <= 1e-12:
             break  # heap max is exact and non-improving: done
         keep, gone = (c1, c2) if c1 < c2 else (c2, c1)
-        parent[find(gone)] = find(keep)
+        merges.append((gone, keep))
         deg[keep] = deg[c1] + deg[c2]
         del deg[gone]
         del inter[key]
@@ -354,7 +350,7 @@ def refine_communities(
                 heap,
                 (-dq_of(k2[0], k2[1], wk), k2[0], k2[1], wk, deg[k2[0]], deg[k2[1]]),
             )
-    mapping = [(c, find(c)) for c in parent]
+    mapping = list(_min_roots(merges).items())
     return _apply_community_map(labels, mapping)
 
 

@@ -7,6 +7,8 @@ from __future__ import annotations
 import math
 import random
 
+import pytest
+
 from entity_resolution__spark.operators.cluster import (
     assign_clusters,
     connected_components,
@@ -176,9 +178,9 @@ def test_cohort_seed_edges_selection(spark):
 
 
 def test_local_dsu_path_matches_star_loop(spark):
-    """The size-adaptive driver-side DSU path must produce EXACTLY the
-    same (node, root=min member) assignments as the distributed
-    large-star/small-star loop."""
+    """The size-adaptive single-task union-find path must produce
+    EXACTLY the same (node, root=min member) assignments as the
+    distributed large-star/small-star loop."""
     random.seed(7)
     nodes = [f"v{i:03d}" for i in range(120)]
     edges = [
@@ -198,52 +200,65 @@ def test_local_dsu_path_matches_star_loop(spark):
 def test_self_loop_parity_local_vs_distributed(spark):
     """Self-loop edges are dropped up front on BOTH paths (ADVICE round
     2: the local DSU used to emit a (node, node) row for a self-loop-only
-    node while the star loop dropped it)."""
-    e = spark.createDataFrame(
-        [("a", "b"), ("c", "c"), ("d", "d")], ["src", "dst"]
+    node while the star loop dropped it). Extra edge columns are ignored
+    on both paths (a `weight` column used to crash the forest pre-pass
+    with RESULT_COLUMN_NAMES_MISMATCH)."""
+    rows = [("a", "b"), ("c", "c"), ("d", "d")]
+    plain = spark.createDataFrame(rows, ["src", "dst"])
+    weighted = spark.createDataFrame(
+        [r + (0.5,) for r in rows], ["src", "dst", "weight"]
     )
-    local = connected_components(e)
-    dist = connected_components(e, local_threshold=0)
-    lrows = {(r["node"], r["root"]) for r in local.assignments.collect()}
-    drows = {(r["node"], r["root"]) for r in dist.assignments.collect()}
-    assert lrows == drows == {("a", "a"), ("b", "a")}
+    for e in (plain, weighted):
+        local = connected_components(e)
+        dist = connected_components(e, local_threshold=0)
+        lrows = {(r["node"], r["root"]) for r in local.assignments.collect()}
+        drows = {(r["node"], r["root"]) for r in dist.assignments.collect()}
+        assert lrows == drows == {("a", "a"), ("b", "a")}
+
+
+@pytest.mark.parametrize("local_threshold", [2_000_000, 0])
+@pytest.mark.parametrize("kind", ["empty", "self_loops_only"])
+def test_no_edges_gives_singletons(spark, kind, local_threshold):
+    """Empty inputs on both paths: no assignment rows, and
+    assign_clusters makes every node its own dense-id cluster."""
+    rows = [] if kind == "empty" else [("a", "a"), ("b", "b")]
+    e = spark.createDataFrame(rows, "src string, dst string")
+    cc = connected_components(e, local_threshold=local_threshold)
+    assert cc.assignments.count() == 0
+    nodes = spark.createDataFrame([(n,) for n in "cab"], "node string")
+    got = sorted(
+        (r["conv_id"], r["cluster_id"], r["cluster_size"])
+        for r in assign_clusters(cc.assignments, nodes).collect()
+    )
+    assert got == [("a", 0, 1), ("b", 1, 1), ("c", 2, 1)]
 
 
 def test_local_dsu_null_edges_dropped_not_corrupted(spark):
     """Round-5 ADVICE: integer edge endpoints with nulls widen to
-    float64 in pandas (NaN dict keys, >2^53 precision loss). The DSU
-    path now drops null endpoints BEFORE the Arrow transfer — matching
-    the distributed loop, whose u>v/u!=v comparisons drop them — and the
-    surviving long ids stay exact integers."""
-    from entity_resolution__spark.operators.cluster import (
-        _local_dsu_components,
-    )
-
+    float64 in pandas (NaN dict keys, >2^53 precision loss). Null
+    endpoints are dropped BEFORE the Arrow transfer on both paths, and
+    the surviving long ids stay exact integers."""
     big = 2**60 + 1  # would lose precision if routed through float64
     e = spark.createDataFrame(
         [(1, 2), (None, 3), (4, None), (big, big + 2)],
         "src long, dst long",
     )
-    got = {(r["node"], r["root"]) for r in _local_dsu_components(e).collect()}
     # null edges contribute nothing; 3 appears in no valid edge
-    assert got == {(1, 1), (2, 1), (big, big), (big + 2, big)}
-    # distributed path parity on the same input
-    dist = connected_components(e, local_threshold=0)
-    drows = {(r["node"], r["root"]) for r in dist.assignments.collect()}
-    assert drows == got
+    want = {(1, 1), (2, 1), (big, big), (big + 2, big)}
+    for local_threshold in (2_000_000, 0):
+        cc = connected_components(e, local_threshold=local_threshold)
+        assert cc.assignments.schema["node"].dataType.simpleString() == "bigint"
+        assert {(r["node"], r["root"]) for r in cc.assignments.collect()} == want
 
 
 def test_distributed_cc_at_size(spark):
     """Round-4 VERDICT #4: exercise the star loop AT SIZE — >100k chain
-    edges (bench runs the same generator at 1.05M), forced past the DSU
-    cutover. Asserts (a) the distributed path actually ran, (b) round
-    count stays ~log2(longest chain), (c) assignments equal BOTH the
-    analytic expectation (chain root = first node) and the driver DSU
-    oracle."""
+    edges (bench runs the same generator at 1.05M), forced past the
+    single-task cutover. Asserts (a) the distributed path actually ran,
+    (b) round count stays ~log2(longest chain), (c) assignments equal
+    BOTH the analytic expectation (chain root = first node) and the
+    single-task union-find path."""
     from entity_resolution__spark.data.synth import make_chain_edges
-    from entity_resolution__spark.operators.cluster import (
-        _local_dsu_components,
-    )
 
     edges, n_edges, expected = make_chain_edges(
         spark, n_chains=1200, chain_len=100, n_long=4, long_len=800
@@ -256,7 +271,9 @@ def test_distributed_cc_at_size(spark):
     got = res.assignments
     assert got.count() == 1200 * 101 + 4 * 801
     assert got.join(expected, ["node", "root"]).count() == got.count()
-    dsu = _local_dsu_components(edges)
+    single = connected_components(edges)
+    assert single.iterations == 0  # the single-task path ran
+    dsu = single.assignments
     assert got.join(dsu, ["node", "root"]).count() == got.count()
     assert dsu.count() == got.count()
 
@@ -309,39 +326,38 @@ def test_incremental_clusters_merge_and_new_nodes(spark):
 
 def test_two_level_forest_prepass_equivalence(spark):
     """Round-7 two-level CC: the partition-local spanning-star pre-pass
-    (_local_forest_edges) must leave the distributed loop's (node,
-    min-root) result IDENTICAL — for string and for integer node ids —
-    while shrinking per-partition diameter (chain converges in fewer
-    rounds than the plain loop)."""
+    (_forest) must leave the distributed loop's (node, min-root) result
+    equal to the DSU oracle — for string and for integer node ids."""
     import random as _r
 
-    from entity_resolution__spark.operators.cluster import (
-        _local_forest_edges,
-        connected_components,
-    )
+    from entity_resolution__spark.operators.cluster import _forest
 
     _r.seed(13)
     nodes = [f"w{i:03d}" for i in range(150)]
     edges = [(_r.choice(nodes), _r.choice(nodes)) for _ in range(200)]
     edges = [(a, b) for a, b in edges if a != b]
     e = spark.createDataFrame(edges, ["src", "dst"]).repartition(7)
-    plain = connected_components(e, local_threshold=0, local_forest=False)
-    two = connected_components(e, local_threshold=0, local_forest=True)
-    assert {(r["node"], r["root"]) for r in plain.assignments.collect()} == {
-        (r["node"], r["root"]) for r in two.assignments.collect()
-    }
+    two = connected_components(e, local_threshold=0)
+    dsu = DSU()
+    for a, b in edges:
+        dsu.union(a, b)
+    comp: dict = {}
+    for x in list(dsu.parent):
+        comp.setdefault(dsu.find(x), []).append(x)
+    want = {(x, min(c)) for c in comp.values() for x in c}
+    assert {(r["node"], r["root"]) for r in two.assignments.collect()} == want
 
     # integer ids through the Arrow boundary
     ei = spark.createDataFrame(
         [(i, i + 1) for i in range(0, 40)], "src long, dst long"
     ).repartition(5)
-    two_i = connected_components(ei, local_threshold=0, local_forest=True)
+    two_i = connected_components(ei, local_threshold=0)
     rows = {(r["node"], r["root"]) for r in two_i.assignments.collect()}
     assert rows == {(i, 0) for i in range(41)}
 
-    # the pre-pass output is a connectivity-equivalent star set: no
-    # self rows, never more edges than nodes-1 per component
-    f = _local_forest_edges(ei.filter("src != dst"))
-    frows = f.collect()
-    assert all(r["src"] != r["dst"] for r in frows)
+    # the pre-pass output is a connectivity-equivalent star set: every
+    # non-root row points to a smaller root, never more such rows than
+    # nodes-1 per component
+    frows = _forest(ei).filter("node != root").collect()
+    assert all(r["node"] > r["root"] for r in frows)
     assert len(frows) <= 40
