@@ -1,35 +1,34 @@
-"""Optional compiled (C) path for the two hot string kernels.
+"""Compiled (C) tier for the two hot string kernels.
 
 jaro + LCS are ~90% of the pairwise feature kernel's single-thread CPU
 (cProfile at the 20k-pair bench batch: jaro_winkler 60%, lcs_len 30%);
 both are per-pair char loops that neither numpy batching (two rewrites
 measured slower — see the round-4 note in functions/features.py and the
-round-7 retry) nor Catalyst can absorb. rapidfuzz would be the normal
-answer but is absent from this environment, so this module compiles a
-direct C transcription of the pure-python kernels with the system gcc
-at first use (cached .so keyed on the source hash), loads it via
-ctypes, and — exactly like the rapidfuzz path in functions/strings.py —
-certifies it against the pure kernels on the parity battery before it
-is allowed to serve. Any failure (no compiler, compile error, battery
-mismatch) silently yields the pure-python fallback; the python kernels
-remain the oracle the tests pin.
+round-7 retry) nor Catalyst can absorb. This module compiles a direct C
+transcription of the pure-python kernels with the system gcc at first
+use (cached .so keyed on the source hash, under SPARK_GRAFT_CKERNEL_DIR
+or the temp dir), loads it via ctypes, and certifies it against the
+pure kernels on strings._parity_battery() before it is allowed to
+serve. Any failure (no compiler, compile error, load error, battery
+mismatch) emits a RuntimeWarning naming the reason and yields None, so
+functions/strings.py runs the pure-python kernels, which remain the
+oracle the tests pin.
 
 Float discipline: the C expressions replicate the python kernels'
 operation ORDER ((m/la + m/lb + (m-t)/m) / 3.0 and
 j + prefix*0.1*(1-j)), all in IEEE double on SSE2 — bit-identical
 results, enforced by the battery plus a randomized-corpus pytest.
-
-SPARK_GRAFT_PURE_KERNELS=1 disables this path (same switch as the
-rapidfuzz probe) for A/B measurement.
 """
 
 from __future__ import annotations
 
+import contextlib
 import ctypes
 import hashlib
 import os
 import subprocess
 import tempfile
+import warnings
 
 import numpy as np
 
@@ -274,27 +273,25 @@ class _CKernels:
         ).astype(np.uint32, copy=False)
         return np.ascontiguousarray(flat), offs
 
-    def jw_batch(self, av, bv) -> np.ndarray:
+    def _batch(self, fn, av, bv, dtype) -> np.ndarray:
         fa, oa = self._encode(av)
         fb, ob = self._encode(bv)
-        out = np.empty(len(av), dtype=np.float64)
-        rc = self._lib.jw_batch(fa, oa, fb, ob, len(av), out)
-        if rc != 0:
-            raise MemoryError("jw_batch: allocation failed")
+        out = np.empty(len(av), dtype=dtype)
+        if fn(fa, oa, fb, ob, len(av), out) != 0:
+            raise MemoryError(f"{fn.__name__}: allocation failed")
         return out
+
+    def jw_batch(self, av, bv) -> np.ndarray:
+        return self._batch(self._lib.jw_batch, av, bv, np.float64)
 
     def lcs_batch(self, av, bv) -> np.ndarray:
-        fa, oa = self._encode(av)
-        fb, ob = self._encode(bv)
-        out = np.empty(len(av), dtype=np.int64)
-        rc = self._lib.lcs_batch(fa, oa, fb, ob, len(av), out)
-        if rc != 0:
-            raise MemoryError("lcs_batch: allocation failed")
-        return out
+        return self._batch(self._lib.lcs_batch, av, bv, np.int64)
 
 
-def _compile() -> str | None:
-    """Compile (or reuse) the cached .so; returns its path or None."""
+def _compile() -> str:
+    """Compile (or reuse) the cached .so and return its path. Raises
+    OSError / SubprocessError when gcc is missing, fails or times out;
+    the temp source and object files are removed on every path."""
     src_hash = hashlib.md5(_C_SOURCE.encode()).hexdigest()[:16]
     cache_dir = os.environ.get("SPARK_GRAFT_CKERNEL_DIR") or os.path.join(
         tempfile.gettempdir(), "erspark_ckernels"
@@ -302,30 +299,30 @@ def _compile() -> str | None:
     so_path = os.path.join(cache_dir, f"ckernels_{src_hash}.so")
     if os.path.exists(so_path):
         return so_path
+    os.makedirs(cache_dir, exist_ok=True)
+    fd, c_path = tempfile.mkstemp(suffix=".c", dir=cache_dir)
+    tmp_so = c_path[:-2] + ".so"
     try:
-        os.makedirs(cache_dir, exist_ok=True)
-        fd, c_path = tempfile.mkstemp(suffix=".c", dir=cache_dir)
         with os.fdopen(fd, "w") as f:
             f.write(_C_SOURCE)
-        tmp_so = c_path[:-2] + ".so"
         # plain -O2, no -ffast-math / -march: IEEE doubles, portable ops
-        r = subprocess.run(
+        subprocess.run(
             ["gcc", "-O2", "-shared", "-fPIC", "-o", tmp_so, c_path],
             capture_output=True,
             timeout=120,
+            check=True,
         )
-        os.unlink(c_path)
-        if r.returncode != 0:
-            return None
         os.replace(tmp_so, so_path)  # atomic: concurrent compiles converge
-        return so_path
-    except (OSError, subprocess.SubprocessError):
-        return None
+    finally:
+        for path in (c_path, tmp_so):
+            with contextlib.suppress(FileNotFoundError):
+                os.unlink(path)
+    return so_path
 
 
-def _probe(k: _CKernels) -> bool:
-    """Exact-parity certification vs the pure-python kernels (same
-    battery + discipline as strings._probe_rapidfuzz)."""
+def _first_mismatch(k: _CKernels) -> tuple[str, str] | None:
+    """Exact-parity certification vs the pure-python kernels: the first
+    battery pair on which either C kernel disagrees, else None."""
     from entity_resolution__spark.functions import strings as S
 
     battery = S._parity_battery()
@@ -334,25 +331,35 @@ def _probe(k: _CKernels) -> bool:
     jw = k.jw_batch(av, bv)
     lcs = k.lcs_batch(av, bv)
     for i, (a, b) in enumerate(battery):
-        if jw[i] != S.jaro_winkler(a, b):
-            return False
-        if int(lcs[i]) != S.lcs_len(a, b):
-            return False
-    return True
+        if jw[i] != S.jaro_winkler(a, b) or int(lcs[i]) != S.lcs_len(a, b):
+            return a, b
+    return None
+
+
+def _unavailable(reason: str) -> None:
+    warnings.warn(
+        f"C string kernels unavailable, using the pure-python tier: {reason}",
+        RuntimeWarning,
+        stacklevel=3,
+    )
 
 
 def load() -> _CKernels | None:
-    """The compiled kernels, or None when unavailable/uncertified."""
-    if os.environ.get("SPARK_GRAFT_PURE_KERNELS") == "1":
-        return None
-    so_path = _compile()
-    if so_path is None:
-        return None
+    """The certified compiled kernels, or None after a RuntimeWarning
+    naming why they cannot serve."""
+    try:
+        so_path = _compile()
+    except (OSError, subprocess.SubprocessError) as e:
+        stderr = (getattr(e, "stderr", None) or b"").decode(errors="replace")
+        return _unavailable(f"compiler missing or failed: {e} {stderr}".strip())
     try:
         k = _CKernels(ctypes.CDLL(so_path))
-    except OSError:
-        return None
+    except (OSError, AttributeError) as e:
+        return _unavailable(f"cannot load {so_path}: {e}")
     try:
-        return k if _probe(k) else None
-    except Exception:
-        return None
+        bad = _first_mismatch(k)
+    except Exception as e:  # noqa: BLE001 - any probe failure means no C tier
+        return _unavailable(f"parity probe raised {e!r}")
+    if bad is not None:
+        return _unavailable(f"parity mismatch with the pure kernels on {bad!r}")
+    return k

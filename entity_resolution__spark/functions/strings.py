@@ -16,8 +16,12 @@ reference takes from rapidfuzz/jellyfish
 
 LCS length uses the Hyyrö/Crochemore bit-parallel algorithm — O(nm/64)
 with Python arbitrary-precision ints — validated against the O(nm) DP in
-tests. All kernels are exposed as vectorized pandas UDF factories; the
-batch loop is per-pair Python over C-speed primitives, Arrow-batched.
+tests.
+
+The Series forms used by the pandas UDFs run on one of two tiers: the
+compiled C kernels of functions/ckernels.py for jaro-winkler and LCS,
+certified bit-identical to the pure kernels at import, or the pure
+kernels themselves, which stay the oracle and the fallback.
 
 These are driver-independent pure functions so the pandas/NumPy oracle
 in tests/oracle.py can share them (cluster parity requires identical
@@ -279,31 +283,23 @@ def metaphone(word: str) -> str:  # noqa: C901 - algorithm is a rule table
 
 
 # ---------------------------------------------------------------------------
-# optional C-accelerated path (rapidfuzz) — round-4 VERDICT #6
+# kernel tiers: compiled C, with the pure-python kernels as the oracle
 # ---------------------------------------------------------------------------
-# jaro + LCS are ~60% of the kernel's single-thread CPU; two pure-python
-# batched rewrites measured SLOWER (round 4), so the remaining lever is a
-# compiled kernel. rapidfuzz computes the exact same published
-# definitions (Indel ratio = 2·LCS/(|a|+|b|), LCSseq length,
-# Jaro-Winkler with prefix 4 / weight 0.1 / boost 0.7): when the library
-# is importable AND an import-time probe confirms exact agreement with
-# the pure kernels on a vector battery, the Series forms route through
-# rapidfuzz.process.cpdist (releases the GIL, C loop). The pure-python
-# kernels stay the oracle path — this container has no rapidfuzz, so CI
-# exercises the fallback; the parity pytest self-skips.
-# SPARK_GRAFT_PURE_KERNELS=1 forces the fallback for A/B measurement.
-
-_RF = None  # module handle when the accelerated path is live
+# jaro + LCS are ~60% of the kernel's single-thread CPU and two
+# pure-python batched rewrites measured SLOWER (round 4), so the lever is
+# a compiled kernel: functions/ckernels.py compiles both with the system
+# gcc and certifies them against the pure kernels on _parity_battery()
+# before they may serve. ckernels.load() is the one place the tier is
+# chosen; when it cannot serve it warns and the Series forms below run
+# the pure kernels.
 
 
 def _parity_battery() -> list[tuple[str, str]]:
-    """The probe's input corpus: 13 curated pairs pinning known branch
-    points, plus a ~300-pair seeded randomized corpus (round-5 ADVICE —
-    an accelerated deployment is the ONLY place the probe runs against
-    the real library, so widen it: unicode casing, long-common-prefix
-    floats, mutation near-misses). Deterministic (fixed seed) so a
-    rejection is reproducible; exposed as a function so CI — which has
-    no rapidfuzz — still exercises corpus generation + the pure kernels
+    """The C tier's certification corpus: 13 curated pairs pinning known
+    branch points, plus a ~300-pair seeded randomized corpus (unicode
+    casing, long-common-prefix floats, mutation near-misses).
+    Deterministic (fixed seed) so a rejection is reproducible; exposed as
+    a function so tests exercise its generation and the pure kernels
     over it (tests/test_strings.py)."""
     battery = [
         ("", ""), ("", "abc"), ("martha", "marhta"), ("dixon", "dicksonx"),
@@ -311,7 +307,7 @@ def _parity_battery() -> list[tuple[str, str]]:
         ("duane", "dwayne"), ("a" * 70 + "b", "b" + "a" * 70),
         ("kitten", "sitting"), ("résumé", "resume"), ("x", "x"),
         # shared prefix but jaro ≤ 0.7: exercises the Winkler BOOST
-        # THRESHOLD branch — a rapidfuzz build applying the prefix bonus
+        # THRESHOLD branch — a kernel applying the prefix bonus
         # unconditionally must be rejected here (round-5 review)
         ("abcdef", "abzzzz"), ("prefab", "prezzzzzzzz"),
     ]
@@ -345,66 +341,9 @@ def _parity_battery() -> list[tuple[str, str]]:
     return battery
 
 
-def _probe_rapidfuzz():
-    import os as _os
+from entity_resolution__spark.functions import ckernels as _ckernels  # noqa: E402
 
-    if _os.environ.get("SPARK_GRAFT_PURE_KERNELS") == "1":
-        return None
-    try:
-        from rapidfuzz.distance import Indel as _Indel
-        from rapidfuzz.distance import LCSseq as _LCSseq
-        from rapidfuzz.distance import JaroWinkler as _JW
-        from rapidfuzz import process as _process
-    except ImportError:
-        return None
-    battery = _parity_battery()
-    for a, b in battery:
-        if _LCSseq.similarity(a, b) != lcs_len(a, b):
-            return None
-        if _JW.similarity(a, b) != jaro_winkler(a, b):
-            return None
-        if _Indel.normalized_similarity(a, b) != edit_ratio(a, b):
-            return None
-    # certify the BATCH path too: cpdist must reproduce the float64
-    # kernels bitwise (its default dtype is float32 for normalized
-    # scorers — the call sites pass float64, and this check rejects any
-    # build where that still quantizes; round-5 review)
-    av = np.array([a for a, _ in battery], dtype=object)
-    bv = np.array([b for _, b in battery], dtype=object)
-    jw_c = _process.cpdist(av, bv, scorer=_JW.similarity, dtype=np.float64, workers=1)
-    er_c = _process.cpdist(
-        av, bv, scorer=_Indel.normalized_similarity, dtype=np.float64, workers=1
-    )
-    lcs_c = _process.cpdist(av, bv, scorer=_LCSseq.similarity, dtype=np.int64, workers=1)
-    for i, (a, b) in enumerate(battery):
-        if jw_c[i] != jaro_winkler(a, b) or er_c[i] != edit_ratio(a, b):
-            return None
-        if int(lcs_c[i]) != lcs_len(a, b):
-            return None
-    return {
-        "LCSseq": _LCSseq,
-        "JW": _JW,
-        "Indel": _Indel,
-        "process": _process,
-    }
-
-
-_RF = _probe_rapidfuzz()
-
-# Compiled-C fallback tier (round 7): when rapidfuzz is absent, compile
-# the two hot kernels (jaro-winkler + bit-parallel LCS) with the system
-# gcc and certify them on the same parity battery — see
-# functions/ckernels.py. Pure python remains the oracle and the
-# unconditional fallback; SPARK_GRAFT_PURE_KERNELS=1 disables both
-# accelerated tiers.
-_CK = None
-if _RF is None:
-    try:
-        from entity_resolution__spark.functions import ckernels as _ckmod
-
-        _CK = _ckmod.load()
-    except Exception:
-        _CK = None
+_CK = _ckernels.load()
 
 
 # ---------------------------------------------------------------------------
@@ -412,117 +351,50 @@ if _RF is None:
 # ---------------------------------------------------------------------------
 
 
-def pair_series(fn, a: pd.Series, b: pd.Series) -> pd.Series:
-    av = a.fillna("").astype(str).to_numpy()
-    bv = b.fillna("").astype(str).to_numpy()
-    return pd.Series(np.fromiter((fn(x, y) for x, y in zip(av, bv)), dtype=np.float64, count=len(av)))
-
-
-def edit_ratio_kernel():
-    """Scalar edit_ratio — the rapidfuzz C implementation when the
-    import-time parity probe passed, else the pure-python kernel. For
-    per-distinct-combo call sites (features._dedup_pair_kernel) where a
-    Series form doesn't fit."""
-    if _RF is not None:
-        return _RF["Indel"].normalized_similarity
-    return edit_ratio
-
-
-def edit_ratio_series(a: pd.Series, b: pd.Series) -> pd.Series:
-    if _RF is not None and len(a):
-        av = a.fillna("").astype(str).to_numpy()
-        bv = b.fillna("").astype(str).to_numpy()
-        return pd.Series(
-            _RF["process"].cpdist(
-                av,
-                bv,
-                scorer=_RF["Indel"].normalized_similarity,
-                dtype=np.float64,  # default float32 would quantize
-                workers=1,
-            )
-        )
-    if _CK is not None and len(a):
-        av = a.fillna("").astype(str).to_numpy()
-        bv = b.fillna("").astype(str).to_numpy()
-        n = len(av)
-        lcs = _CK.lcs_batch(av, bv).astype(np.float64)
-        la = np.fromiter((len(x) for x in av), dtype=np.int64, count=n)
-        lb = np.fromiter((len(x) for x in bv), dtype=np.int64, count=n)
-        tot = la + lb
-        return pd.Series(
-            np.where(tot == 0, 1.0, 2.0 * lcs / np.maximum(tot, 1))
-        )
-    return pair_series(edit_ratio, a, b)
-
-
-def lcs_ratio_series(a: pd.Series, b: pd.Series) -> pd.Series:
-    return pair_series(lcs_ratio, a, b)
+def _as_str(s: pd.Series) -> np.ndarray:
+    return s.fillna("").astype(str).to_numpy()
 
 
 def indel_and_lcs_series(
     a: pd.Series, b: pd.Series
 ) -> tuple[pd.Series, pd.Series]:
-    """(edit_ratio, lcs_ratio) from ONE bit-parallel LCS pass per pair.
+    """(edit_ratio, lcs_ratio) from ONE LCS pass per pair.
 
     Both ratios are normalizations of the same LCS length; computing
     them independently ran the O(nm/64) kernel twice per pair — LCS was
-    ~40% of the feature stage's CPU at bench scale (round 4). Values are
-    identical to the two separate series."""
-    av = a.fillna("").astype(str).to_numpy()
-    bv = b.fillna("").astype(str).to_numpy()
+    ~40% of the feature stage's CPU at bench scale (round 4). The ratios
+    are the scalar kernels' float64 expressions over the integer LCS
+    lengths, so values equal edit_ratio / lcs_ratio on either tier."""
+    av, bv = _as_str(a), _as_str(b)
     n = len(av)
-    if (_RF is not None or _CK is not None) and n:
-        # one C-side LCS pass (rapidfuzz or the compiled ckernels tier);
-        # both ratios are numpy arithmetic over the integer LCS lengths
-        # (identical formulas to the loop below)
-        if _RF is not None:
-            lcs = _RF["process"].cpdist(
-                av, bv, scorer=_RF["LCSseq"].similarity, dtype=np.int64,
-                workers=1,
-            ).astype(np.float64)
-        else:
-            lcs = _CK.lcs_batch(av, bv).astype(np.float64)
-        la = np.fromiter((len(x) for x in av), dtype=np.int64, count=n)
-        lb = np.fromiter((len(x) for x in bv), dtype=np.int64, count=n)
-        tot = la + lb
-        both_empty = tot == 0
-        er = np.where(both_empty, 1.0, 2.0 * lcs / np.maximum(tot, 1))
-        mx = np.maximum(la, lb)
-        lr = np.where(both_empty, 1.0, lcs / np.maximum(mx, 1))
-        lr = np.where((la == 0) ^ (lb == 0), 0.0, lr)
-        return pd.Series(er), pd.Series(lr)
-    er = np.empty(n)
-    lr = np.empty(n)
-    for i in range(n):
-        x, y = av[i], bv[i]
-        if not x and not y:
-            er[i] = 1.0
-            lr[i] = 1.0
-            continue
-        lcs = lcs_len(x, y)
-        er[i] = 2.0 * lcs / (len(x) + len(y))
-        lr[i] = lcs / max(len(x), len(y)) if x and y else 0.0
+    if _CK is not None:
+        lcs = _CK.lcs_batch(av, bv).astype(np.float64)
+    else:
+        lcs = np.fromiter(
+            (lcs_len(x, y) for x, y in zip(av, bv)), dtype=np.float64, count=n
+        )
+    la = np.fromiter((len(x) for x in av), dtype=np.int64, count=n)
+    lb = np.fromiter((len(x) for x in bv), dtype=np.int64, count=n)
+    tot = la + lb
+    both_empty = tot == 0
+    er = np.where(both_empty, 1.0, 2.0 * lcs / np.maximum(tot, 1))
+    mx = np.maximum(la, lb)
+    lr = np.where(both_empty, 1.0, lcs / np.maximum(mx, 1))
+    lr = np.where((la == 0) ^ (lb == 0), 0.0, lr)
     return pd.Series(er), pd.Series(lr)
 
 
 def jaro_winkler_series(a: pd.Series, b: pd.Series) -> pd.Series:
-    if _RF is not None and len(a):
-        av = a.fillna("").astype(str).to_numpy()
-        bv = b.fillna("").astype(str).to_numpy()
-        return pd.Series(
-            _RF["process"].cpdist(
-                av,
-                bv,
-                scorer=_RF["JW"].similarity,
-                dtype=np.float64,  # default float32 would quantize
-                workers=1,
-            )
-        )
-    if _CK is not None and len(a):
-        av = a.fillna("").astype(str).to_numpy()
-        bv = b.fillna("").astype(str).to_numpy()
+    av, bv = _as_str(a), _as_str(b)
+    if _CK is not None:
         return pd.Series(_CK.jw_batch(av, bv))
-    return pair_series(jaro_winkler, a, b)
+    return pd.Series(
+        np.fromiter(
+            (jaro_winkler(x, y) for x, y in zip(av, bv)),
+            dtype=np.float64,
+            count=len(av),
+        )
+    )
 
 
 # bounded worker-level metaphone memo: first tokens are Zipfian, so the
@@ -549,8 +421,7 @@ def _first_token(s: str) -> str:
 def metaphone_match_series(a: pd.Series, b: pd.Series) -> pd.Series:
     """First-token metaphone equality → {0.0, 1.0}
     (reference feautre_extraction.py:56-59)."""
-    av = a.fillna("").astype(str).to_numpy()
-    bv = b.fillna("").astype(str).to_numpy()
+    av, bv = _as_str(a), _as_str(b)
     return pd.Series(
         np.fromiter(
             (

@@ -4,7 +4,10 @@ values, metaphone sanity (FIXTURES.md §4 string_pairs_golden)."""
 from __future__ import annotations
 
 import math
+import random
 
+import numpy as np
+import pandas as pd
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -185,10 +188,9 @@ def test_kernel_batch_invariance():
 
 
 def test_parity_battery_generation_and_pure_kernels():
-    """The probe corpus itself must be exercisable WITHOUT rapidfuzz
-    (round-5 ADVICE widened it to ~300 seeded random pairs — this is the
-    CI guard that the generation code and the pure kernels over it don't
-    break, since the probe body only runs in accelerated deployments)."""
+    """The battery that certifies the C tier at import: its generation
+    must stay deterministic and the pure kernels must stay well-defined
+    over it (round-5 ADVICE widened it to ~300 seeded random pairs)."""
     b1 = K._parity_battery()
     b2 = K._parity_battery()
     assert b1 == b2  # deterministic (fixed seed)
@@ -209,43 +211,45 @@ def test_parity_battery_generation_and_pure_kernels():
     assert highs > 50
 
 
-def test_rapidfuzz_parity_if_available():
-    """Round-4 VERDICT #6: the optional C-accelerated kernel path. When
-    rapidfuzz is importable the import-time probe must have accepted it
-    (exact agreement on the battery), and the Series forms must match
-    the pure-python kernels bitwise on a broad random sample. Self-skips
-    in this container (no rapidfuzz) — the fallback IS the oracle path."""
-    import pytest
-
-    from entity_resolution__spark.functions import strings as K
-
-    if K._RF is None:
-        try:
-            import rapidfuzz  # noqa: F401
-        except ImportError:
-            pytest.skip("rapidfuzz not installed; pure-python path active")
-        pytest.fail("rapidfuzz installed but the parity probe rejected it")
-
-    import random
-
+def _seeded_pairs(n: int = 500) -> list[tuple[str, str]]:
     rng = random.Random(99)
     alpha = "abcdefgh XYZ.,-éü"
-    pairs = [
-        (
-            "".join(rng.choice(alpha) for _ in range(rng.randrange(0, 40))),
-            "".join(rng.choice(alpha) for _ in range(rng.randrange(0, 40))),
-        )
-        for _ in range(500)
-    ]
-    a = pd.Series([p[0] for p in pairs])
-    b = pd.Series([p[1] for p in pairs])
-    er_fast, lr_fast = K.indel_and_lcs_series(a, b)
-    jw_fast = K.jaro_winkler_series(a, b)
-    er_ref = pd.Series([K.edit_ratio(x, y) for x, y in pairs])
-    lr_ref = pd.Series([K.lcs_ratio(x, y) for x, y in pairs])
-    jw_ref = pd.Series([K.jaro_winkler(x, y) for x, y in pairs])
-    assert (er_fast.to_numpy() == er_ref.to_numpy()).all()
-    assert (lr_fast.to_numpy() == lr_ref.to_numpy()).all()
-    assert (jw_fast.to_numpy() == jw_ref.to_numpy()).all()
-    kern = K.edit_ratio_kernel()
-    assert all(kern(x, y) == K.edit_ratio(x, y) for x, y in pairs[:100])
+
+    def rs() -> str:
+        return "".join(rng.choice(alpha) for _ in range(rng.randrange(0, 40)))
+
+    return [(rs(), rs()) for _ in range(n)]
+
+
+@pytest.mark.parametrize("tier", ["c", "python"])
+def test_series_forms_route_through_ck(tier, kernel_pairs, monkeypatch):
+    """The Series forms are bitwise-equal to the scalar kernels on
+    whichever tier serves them."""
+    if tier == "python":
+        monkeypatch.setattr(K, "_CK", None)
+    elif K._CK is None:
+        pytest.skip("C kernels unavailable (no compiler or probe failed)")
+    pairs = kernel_pairs + _seeded_pairs()
+    a = pd.Series([x for x, _ in pairs])
+    b = pd.Series([y for _, y in pairs])
+    jw = K.jaro_winkler_series(a, b)
+    er, lr = K.indel_and_lcs_series(a, b)
+    assert np.array_equal(jw, [K.jaro_winkler(x, y) for x, y in pairs])
+    assert np.array_equal(er, [K.edit_ratio(x, y) for x, y in pairs])
+    assert np.array_equal(lr, [K.lcs_ratio(x, y) for x, y in pairs])
+
+
+def test_feature_struct_identical_across_tiers(kernel_pairs, monkeypatch):
+    from entity_resolution__spark.functions.features import compute_feature_struct
+
+    if K._CK is None:
+        pytest.skip("C kernels unavailable (no compiler or probe failed)")
+    pairs = kernel_pairs + _seeded_pairs()
+    a = pd.Series([x for x, _ in pairs])
+    b = pd.Series([y for _, y in pairs])
+    seq_l = pd.Series(["\x1fuser\x1fassistant"[: i % 20] for i in range(len(pairs))])
+    seq_r = pd.Series(["\x1fassistant\x1fuser"[: i % 17] for i in range(len(pairs))])
+    args = (a, b, seq_l, seq_r, seq_r, seq_l, {"abc": 1.5, "xyz": 0.7})
+    c_tier = compute_feature_struct(*args)
+    monkeypatch.setattr(K, "_CK", None)
+    pd.testing.assert_frame_equal(compute_feature_struct(*args), c_tier, check_exact=True)
