@@ -5,8 +5,10 @@ The reference blocks by brute-force TF-IDF cosine kNN over all N entities
 10^12 turns. We replace it (per north_star) with key-based blocking:
 
   * token keys   — rarest / leading normalized tokens per conversation
-  * q-gram MinHash-LSH bands — near-duplicate-robust keys computed in a
-    vectorized pandas UDF (numpy, Arrow-batched)
+  * q-gram MinHash-LSH bands — near-duplicate-robust keys banded from
+    each conversation's `sig` column; `make_minhash_udf` computes that
+    signature in a vectorized pandas UDF (numpy, Arrow-batched) inside
+    the conversations stage, so blocking itself runs no Python
 
 Two conversations become a candidate pair iff they share ≥1 key. Hot
 keys (skew) are handled by `salt_blocks`: a block larger than `cap` is
@@ -351,22 +353,17 @@ def make_minhash_udf(num_perm: int = 32, qgram: int = 4, seed: int = 7):
 
 
 def minhash_band_keys(
-    conv: DataFrame,
-    text_col: str = "full_text",
-    num_perm: int = 32,
-    bands: int = 8,
-    seed: int = 7,
+    conv: DataFrame, num_perm: int = 32, bands: int = 8
 ) -> DataFrame:
-    """LSH banding: signature split into `bands` rows-per-band groups;
-    block_key = band index + hash of the band slice. Pairs agreeing on
-    any band become candidates (classic MinHash-LSH S-curve).
+    """LSH banding of conv's `sig` column (a `make_minhash_udf(num_perm)`
+    signature): split into `bands` rows-per-band groups; block_key =
+    band index + hash of the band slice. Pairs agreeing on any band
+    become candidates (classic MinHash-LSH S-curve). Pure Catalyst: the
+    signature was computed once, with the conversation's other UDFs.
     """
     assert num_perm % bands == 0
     rows_per_band = num_perm // bands
-    sig = conv.select(
-        "conv_id", make_minhash_udf(num_perm, seed=seed)(F.col(text_col)).alias("sig")
-    )
-    keys = sig.select(
+    keys = conv.select(
         "conv_id",
         F.explode(
             F.array(

@@ -33,6 +33,8 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -141,7 +143,6 @@ def _forest(edges: DataFrame) -> DataFrame:
     ~log(cross-partition path length) rounds instead of ~log(graph
     diameter) — 11 rounds became 3 on 1.05M chain edges. Null endpoints
     must be dropped by the caller."""
-    import pandas as pd
     import pandas.api.types as pt
     from pyspark.sql import types as T
 
@@ -267,20 +268,28 @@ def _dense_ids(
     """distinct key rows → + dense 0..K-1 id in sorted-key order.
 
     Size-adaptive: K under the threshold is numbered driver-side (one
-    collect, one createDataFrame) — the distributed sort+zipWithIndex
-    path costs 2 extra jobs plus a Python-RDD round trip, pure overhead
-    for dimension-sized K. Above the threshold: distributed sort +
-    zipWithIndex over the K rows only (never a global window — a
-    `row_number() over ()` would serialize on one task)."""
+    collect, then a pandas frame sent to createDataFrame over Arrow,
+    which plans a JVM-side scan of the driver's batches — no Python
+    worker task, where a list of Rows would be unpickled by Python
+    tasks). The distributed sort+zipWithIndex path costs 2 extra jobs
+    plus a Python-RDD round trip, pure overhead for dimension-sized K.
+    Above the threshold: distributed sort + zipWithIndex over the K rows
+    only (never a global window — a `row_number() over ()` would
+    serialize on one task)."""
     spark = distinct_keys.sparkSession
     keys = distinct_keys.orderBy(*key_cols)
     schema_str = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in distinct_keys.schema.fields
     )
     probe = keys.limit(local_threshold + 1).collect()
+    if not probe:
+        # createDataFrame skips Arrow for an empty frame and would ship
+        # rows through Python; LIMIT 0 plans an empty local relation
+        return keys.limit(0).withColumn(id_col, F.lit(None).cast("long"))
     if len(probe) <= local_threshold:
-        rows = [tuple(r) + (i,) for i, r in enumerate(probe)]
-        return spark.createDataFrame(rows, f"{schema_str}, {id_col} long")
+        pdf = pd.DataFrame.from_records(probe, columns=distinct_keys.columns)
+        pdf[id_col] = np.arange(len(pdf), dtype=np.int64)
+        return spark.createDataFrame(pdf, f"{schema_str}, {id_col} long")
     indexed = keys.rdd.map(tuple).zipWithIndex().map(lambda t: t[0] + (t[1],))
     return spark.createDataFrame(indexed, f"{schema_str}, {id_col} long")
 

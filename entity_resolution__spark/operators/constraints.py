@@ -19,7 +19,10 @@ anti-joins:
 Country extraction runs ONCE PER CONVERSATION (the reference recomputes
 per pair via driver dict, apply_transitivity.py:99-105), then both pair
 sides join the per-entity array — an O(N) derivation + two hash joins
-instead of O(pairs) regex work.
+instead of O(pairs) regex work. The pipeline computes `extract_countries`
+as the conversations stage's `countries` column, in the same Arrow
+Python pass as normalization and MinHash, so the prune joins read a
+materialized column and run no Python.
 """
 
 from __future__ import annotations
@@ -99,13 +102,6 @@ def extract_countries(texts: pd.Series) -> pd.Series:
         return sorted({c for c, cre in _COUNTRY_RES if cre.search(t)})
 
     return texts.fillna("").map(one)
-
-
-def conv_countries(conv: DataFrame, text_col: str = "full_text") -> DataFrame:
-    """(conv_id, countries) — derived once per conversation."""
-    return conv.select(
-        "conv_id", extract_countries(F.col(text_col)).alias("countries")
-    )
 
 
 def geo_prune_pairs(pairs: DataFrame, countries: DataFrame) -> DataFrame:

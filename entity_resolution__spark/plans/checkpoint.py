@@ -16,6 +16,7 @@ kill-and-rerun tests exercise.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import re
@@ -30,8 +31,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 
 def fingerprint(params: dict[str, Any]) -> str:
-    import hashlib
-
     return hashlib.sha256(
         json.dumps(params, sort_keys=True, default=str).encode()
     ).hexdigest()[:16]
@@ -206,9 +205,12 @@ class StageStore(_StageStoreContract):
         os.makedirs(stage_dir, exist_ok=True)
         spark = df.sparkSession
         # sanitize the SQL identifier (round-6 ADVICE: a stage name with
-        # a dot/space broke DROP TABLE/saveAsTable — only '-' was mapped)
-        safe = re.sub(r"[^A-Za-z0-9_]", "_", f"{stage}_{self.run_id}")
-        table = f"er_stage_{safe}"
+        # a dot/space broke DROP TABLE/saveAsTable — only '-' was mapped);
+        # the hash of the raw name keeps it injective ('a.b' vs 'a_b')
+        raw = f"{stage}_{self.run_id}"
+        safe = re.sub(r"[^A-Za-z0-9_]", "_", raw)
+        digest = hashlib.sha256(raw.encode()).hexdigest()[:8]
+        table = f"er_stage_{safe}_{digest}"
         spark.sql(f"DROP TABLE IF EXISTS {table}")
         w = df.write.mode("overwrite").option("path", data_dir).bucketBy(
             n_buckets, *bucket_cols

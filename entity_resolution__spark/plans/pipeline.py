@@ -2,12 +2,19 @@
 
 Stage DAG (each optionally checkpointed via StageStore, north_rule):
 
-  transcripts ─ canonicalize ─ conversations
-  conversations ─ blocking keys (tokens ∪ MinHash-LSH bands) ─ blocks
+  transcripts ─ canonicalize + sig + countries ─ conversations
+  conversations ─ blocking keys (tokens ∪ MinHash-LSH bands of sig) ─ blocks
   blocks ─ candidate_pairs (salted within-block join) ─ pairs
   pairs + conversations ─ featurize ─ score ─ scored
-  scored ─ threshold + geo/token constraints ─ edges
+  scored + conversations.countries ─ threshold + geo/token constraints ─ edges
   edges ─ large-star/small-star CC ─ clusters (dense ids + sizes)
+
+Every per-conversation Python derivation (normalized text + tokens, the
+MinHash signature `sig`, the whitelisted `countries`) reads `full_text`
+in ONE projection, so Spark plans a single ArrowEvalPython node: one
+Python task per partition instead of one per UDF. Later stages read
+those columns from the materialized conversations and run no Python
+over them.
 
 Mirrors the reference entry points E1–E3 (SURVEY.md §3) as one lazy
 Spark DAG with explicit stage boundaries.
@@ -22,6 +29,7 @@ from pyspark.sql import functions as F
 
 from entity_resolution__spark.functions.features import global_idf
 from entity_resolution__spark.operators.blocking import (
+    make_minhash_udf,
     minhash_band_keys,
     rare_token_keys,
 )
@@ -33,7 +41,7 @@ from entity_resolution__spark.operators.cluster import (
 )
 from entity_resolution__spark.operators.constraints import (
     apply_constraints,
-    conv_countries,
+    extract_countries,
     geo_prune_pairs,
     stopwords_by_df,
     token_overlap_prune_pairs,
@@ -41,6 +49,13 @@ from entity_resolution__spark.operators.constraints import (
 from entity_resolution__spark.operators.pairs import attach_pair_payload, candidate_pairs
 from entity_resolution__spark.operators.score import featurize_pairs, score_pairs
 from entity_resolution__spark.plans.checkpoint import StageStore
+
+
+# Part of every stage fingerprint: bump it when a stage's output columns
+# change, so a warehouse committed by older code recomputes instead of
+# serving a snapshot that lacks a column (layout 2: conversations carry
+# `sig` and `countries`).
+SNAPSHOT_LAYOUT = 2
 
 
 @dataclass
@@ -96,22 +111,28 @@ class ERConfig:
         }
 
 
+# run_pipeline's stages in DAG order; `until` names the last one to run
+# ("edges" covers both edge outputs)
+STAGES = ("conversations", "blocks", "candidate_pairs", "scores", "edges", "clusters")
+
+
 @dataclass
 class ERResult:
-    conversations: DataFrame
-    blocks: DataFrame
-    pairs: DataFrame
-    scored: DataFrame
-    edges: DataFrame
-    dropped: DataFrame
-    clusters: DataFrame
+    # outputs of stages after `until` stay None
+    conversations: DataFrame | None = None
+    blocks: DataFrame | None = None
+    pairs: DataFrame | None = None
+    scored: DataFrame | None = None
+    edges: DataFrame | None = None
+    dropped: DataFrame | None = None
+    clusters: DataFrame | None = None
     cc_iterations: int = 0
     stage_rows: dict = field(default_factory=dict)
     stage_wall: dict = field(default_factory=dict)  # cfg.stage_timing=True
     stage_cpu: dict = field(default_factory=dict)  # + cfg.cpu_probe set
     stage_gc: dict = field(default_factory=dict)  # + cfg.gc_probe set
-    # store-less mode: transient persisted dimensions (countries/prune)
-    # still referenced by the LAZY edges/clusters plans — call
+    # store-less mode: the transient persisted prune set is still
+    # referenced by the LAZY edges/clusters plans — call
     # release_transients() once the outputs are materialized, or they
     # stay cached for the session's lifetime (CacheManager holds strong
     # refs to cached SQL plans; ContextCleaner will NOT reclaim them)
@@ -137,6 +158,20 @@ def build_blocks(conv: DataFrame, cfg: ERConfig, n_docs: int | None = None) -> D
             )
         )
     return keys
+
+
+def build_conversations(transcripts: DataFrame, cfg: ERConfig) -> DataFrame:
+    """canonicalize() plus the per-conversation derivations the later
+    stages read: `sig` (MinHash signature, when cfg.use_minhash) and
+    `countries` (when cfg.use_geo_constraint). All UDFs read full_text
+    in one projection, so they share one Arrow Python pass."""
+    conv = canonicalize(transcripts)
+    text = F.col("full_text")
+    if cfg.use_minhash:
+        conv = conv.withColumn("sig", make_minhash_udf(cfg.minhash_perm)(text))
+    if cfg.use_geo_constraint:
+        conv = conv.withColumn("countries", extract_countries(text))
+    return conv
 
 
 def cohort_seed_edges(
@@ -184,12 +219,18 @@ def run_pipeline(
     transcripts: DataFrame,
     cfg: ERConfig | None = None,
     store: StageStore | None = None,
+    until: str | None = None,
 ) -> ERResult:
+    """Run the stages of STAGES in order; with `until`, stop after that
+    stage, so no later stage is computed or committed."""
+    if until is not None and until not in STAGES:
+        raise ValueError(f"until must be one of {STAGES}, got {until!r}")
     cfg = cfg or ERConfig()
     p = cfg.params()
     stage_wall: dict[str, float] = {}
     stage_cpu: dict[str, float] = {}
     stage_gc: dict[str, float] = {}
+    res = ERResult(stage_wall=stage_wall, stage_cpu=stage_cpu, stage_gc=stage_gc)
 
     # Input identity folded into every stage fingerprint (else a rerun
     # with a different --input but the same warehouse would silently
@@ -233,6 +274,7 @@ def run_pipeline(
             params = {
                 **p,
                 "stage": name,
+                "layout": SNAPSHOT_LAYOUT,
                 "input": input_fp,
                 "lineage_snapshots": {
                     dep: (store.manifest(dep) or {}).get("snapshot_id")
@@ -247,19 +289,24 @@ def run_pipeline(
             stage_gc[name] = round(cfg.gc_probe() - gc0, 3)
         return out
 
-    # canonicalize emits norm_text + tokens via one fused Arrow UDF
-    conv = staged("conversations", lambda: canonicalize(transcripts))
+    conv = res.conversations = staged(
+        "conversations", lambda: build_conversations(transcripts, cfg)
+    )
+    if until == "conversations":
+        return res
 
     # one corpus count, threaded through every operator that needs N
     # (blocking DF caps, stopword cutoffs, idf smoothing); also warms the
     # conv persist so downstream branches read from cache
     n_docs = conv.count()
 
-    blocks = staged(
+    blocks = res.blocks = staged(
         "blocks", lambda: build_blocks(conv, cfg, n_docs=n_docs), ["conversations"]
     )
+    if until == "blocks":
+        return res
 
-    pairs = staged(
+    pairs = res.pairs = staged(
         "candidate_pairs",
         lambda: candidate_pairs(
             blocks,
@@ -269,6 +316,8 @@ def run_pipeline(
         ),
         ["blocks"],
     )
+    if until == "candidate_pairs":
+        return res
 
     idf_map = global_idf(conv, n_docs=n_docs) if cfg.use_global_idf else None
 
@@ -306,7 +355,11 @@ def run_pipeline(
             "token_jaccard",
         )
 
-    scored = staged("scores", compute_scored, ["candidate_pairs", "conversations"])
+    scored = res.scored = staged(
+        "scores", compute_scored, ["candidate_pairs", "conversations"]
+    )
+    if until == "scores":
+        return res
 
     # transient persists released once both edge outputs are committed
     _edge_persists: list[DataFrame] = []
@@ -314,14 +367,7 @@ def run_pipeline(
     def compute_edges() -> tuple[DataFrame, DataFrame]:
         prune_sets = []
         if cfg.use_geo_constraint:
-            # materialize the derived country table BEFORE the two-branch
-            # prune join: left lazy, the UDF subtree is planned inside the
-            # join's shuffle-map stages and the composite plan measured ~9×
-            # slower (26.8s vs 3.0s at 100k turns) than joining the small
-            # cached dimension
-            countries = conv_countries(conv).persist()
-            countries.count()
-            _edge_persists.append(countries)
+            countries = conv.select("conv_id", "countries")
             prune_sets.append(geo_prune_pairs(scored, countries))
         if cfg.use_token_overlap_constraint:
             sw = stopwords_by_df(conv, cfg.stopword_df_cutoff, n_docs=n_docs)
@@ -347,10 +393,10 @@ def run_pipeline(
         )
 
     # compute (kept, dropped) ONCE and serve both stages from the single
-    # pair — the two outputs share the country-extraction UDF and prune
-    # joins. The computation is LAZY behind the stage gate (ADVICE round
-    # 2): a warm resume that serves both edge stages from committed
-    # snapshots never runs the country-extraction pass at all.
+    # pair — the two outputs share the persisted prune set. The
+    # computation is LAZY behind the stage gate (ADVICE round 2): a warm
+    # resume that serves both edge stages from committed snapshots never
+    # plans the prune joins at all.
     _edge_cache: dict[str, tuple[DataFrame, DataFrame]] = {}
 
     def _edges_pair() -> tuple[DataFrame, DataFrame]:
@@ -362,7 +408,7 @@ def run_pipeline(
         kept = staged("edges", lambda: _edges_pair()[0], ["scores"])
         dropped = staged("edges_dropped", lambda: _edges_pair()[1], ["scores"])
         # both outputs are committed snapshots now — the transient
-        # country/prune caches have served their purpose
+        # prune cache has served its purpose
         for df in _edge_persists:
             df.unpersist()
         _edge_persists = []
@@ -375,6 +421,10 @@ def run_pipeline(
         # executor storage memory (round-3 review: CacheManager holds
         # strong refs, GC does not reclaim cached SQL plans)
         kept, dropped = _edges_pair()
+    res.edges, res.dropped = kept, dropped
+    res.transient_persists = list(_edge_persists)
+    if until == "edges":
+        return res
 
     cluster_edges = kept.filter(
         F.col("prob_match") >= F.lit(cfg.cluster_threshold)
@@ -397,19 +447,6 @@ def run_pipeline(
         all_nodes = conv.select(F.col("conv_id").alias("node"))
         return assign_clusters(cc.assignments, all_nodes)
 
-    clusters = staged("clusters", compute_clusters, ["edges", "conversations"])
-
-    return ERResult(
-        conversations=conv,
-        blocks=blocks,
-        pairs=pairs,
-        scored=scored,
-        edges=kept,
-        dropped=dropped,
-        clusters=clusters,
-        cc_iterations=cc_iter_store.get("iterations", 0),
-        stage_wall=stage_wall,
-        stage_cpu=stage_cpu,
-        stage_gc=stage_gc,
-        transient_persists=list(_edge_persists),
-    )
+    res.clusters = staged("clusters", compute_clusters, ["edges", "conversations"])
+    res.cc_iterations = cc_iter_store.get("iterations", 0)
+    return res

@@ -11,7 +11,7 @@ Local smoke (this container):
 
 Stages resume from their last committed snapshot via StageStore; pass
 --stage to run a prefix of the DAG (all | canonicalize | blocking |
-pairs | score | cluster).
+pairs | score | cluster): no stage after it is computed or committed.
 """
 
 from __future__ import annotations
@@ -25,14 +25,24 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
+# --stage → the last run_pipeline stage it runs (None: every stage)
+STAGE_UNTIL = {
+    "all": None,
+    "canonicalize": "conversations",
+    "blocking": "blocks",
+    "pairs": "candidate_pairs",
+    "score": "scores",
+    "cluster": "clusters",
+}
+
+
 def parse_args(argv=None):
     p = argparse.ArgumentParser()
     p.add_argument("--input", help="transcripts table/path (parquet dir or table)")
     p.add_argument("--synthetic", type=int, default=0, help="generate N synthetic entities instead of --input")
     p.add_argument("--warehouse", default=".data/warehouse")
     p.add_argument("--master", default=None)
-    p.add_argument("--stage", default="all",
-                   choices=["all", "canonicalize", "blocking", "pairs", "score", "cluster"])
+    p.add_argument("--stage", default="all", choices=list(STAGE_UNTIL))
     p.add_argument("--keep-threshold", type=float, default=0.45)
     p.add_argument("--cluster-threshold", type=float, default=0.60)
     p.add_argument("--no-minhash", action="store_true")
@@ -71,17 +81,14 @@ def main(argv=None) -> int:
     )
     store = StageStore(args.warehouse)
     t0 = time.monotonic()
-    res = run_pipeline(spark, transcripts, cfg, store=store)
-
-    # --stage: force materialization up to the requested stage only
+    until = STAGE_UNTIL[args.stage]
+    res = run_pipeline(spark, transcripts, cfg, store=store, until=until)
     stage_df = {
-        "canonicalize": res.conversations,
-        "blocking": res.blocks,
-        "pairs": res.pairs,
-        "score": res.scored,
-        "cluster": res.clusters,
-        "all": res.clusters,
-    }[args.stage]
+        "conversations": res.conversations,
+        "blocks": res.blocks,
+        "candidate_pairs": res.pairs,
+        "scores": res.scored,
+    }.get(until, res.clusters)
     n = stage_df.count()
     wall = time.monotonic() - t0
     if args.output and args.stage in ("all", "cluster"):

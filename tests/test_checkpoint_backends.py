@@ -128,3 +128,24 @@ def test_bucketed_commit_colocated_join(spark, tmp_path_factory):
     assert m["bucket_spec"]["bucket_cols"] == ["k"]
     again = store.read_bucketed(spark, "stage_a")
     assert again.count() == 1000
+
+
+def test_bucketed_stage_names_do_not_collide(spark, tmp_path_factory):
+    """Stages 'a.b' and 'a_b' sanitize to the same identifier; the hash
+    of the raw name keeps their catalog tables apart (they used to share
+    one, so reading 'a.b' returned 'a_b''s rows)."""
+    from pyspark.sql import functions as F
+
+    store = StageStore(str(tmp_path_factory.mktemp("bucketed_names")))
+    dotted = spark.range(3).select(F.col("id").alias("k"))
+    underscored = spark.range(10, 15).select(F.col("id").alias("k"))
+    store.commit_bucketed(dotted, "a.b", "fp-dot", 2, ["k"])
+    store.commit_bucketed(underscored, "a_b", "fp-us", 2, ["k"])
+
+    tables = {s: store.manifest(s)["bucket_spec"]["table"] for s in ("a.b", "a_b")}
+    assert tables["a.b"] != tables["a_b"]
+    got = {
+        s: sorted(r["k"] for r in store.read_bucketed(spark, s).collect())
+        for s in ("a.b", "a_b")
+    }
+    assert got == {"a.b": [0, 1, 2], "a_b": [10, 11, 12, 13, 14]}

@@ -10,6 +10,7 @@ import random
 import pytest
 
 from entity_resolution__spark.operators.cluster import (
+    _dense_ids,
     assign_clusters,
     connected_components,
 )
@@ -361,3 +362,28 @@ def test_two_level_forest_prepass_equivalence(spark):
     frows = _forest(ei).filter("node != root").collect()
     assert all(r["node"] > r["root"] for r in frows)
     assert len(frows) <= 40
+
+
+@pytest.mark.parametrize(
+    "rows,schema,keys",
+    [
+        ([("b", 2), ("a", 1), ("c", 5)], "root string, cluster_size int", ["root"]),
+        (
+            [("x", "b", 2), ("x", "a", 1), ("w", "c", 5)],
+            "cohort string, root_node string, cluster_size int",
+            ["cohort", "root_node"],
+        ),
+        ([], "root string, cluster_size int", ["root"]),
+    ],
+    ids=["string_keys", "cohort_root_keys", "empty"],
+)
+def test_dense_ids_driver_branch_runs_no_python(spark, rows, schema, keys):
+    """The driver-numbered dimension is dense 0..K-1 in sorted-key order,
+    and its plan is a JVM-side scan: no PythonRDD unpickles its rows."""
+    dim = _dense_ids(spark.createDataFrame(rows, schema), keys, "cluster_id")
+    debug = dim._jdf.queryExecution().toRdd().toDebugString()
+    assert "PythonRDD" not in debug, debug
+    assert dim.columns == [c.split()[0] for c in schema.split(", ")] + ["cluster_id"]
+    assert dict(dim.dtypes)["cluster_id"] == "bigint"
+    want = [tuple(r) + (i,) for i, r in enumerate(sorted(rows))]
+    assert [tuple(r) for r in dim.orderBy("cluster_id").collect()] == want

@@ -85,9 +85,10 @@ def test_resume_from_snapshot(spark, tiny_transcripts_sdf, tmp_path_factory):
 def test_warm_resume_skips_edge_recompute(
     spark, tiny_transcripts_sdf, tmp_path_factory, monkeypatch
 ):
-    """ADVICE round 2: a fully-warm resume must serve the edge stages
-    from committed snapshots WITHOUT re-running the country-extraction
-    pass (compute_edges used to execute eagerly before the stage gate)."""
+    """ADVICE round 2: a fully-warm resume must serve every stage from
+    committed snapshots WITHOUT re-running the conversations pass, whose
+    Arrow UDFs include the country extraction (compute_edges used to
+    execute eagerly before the stage gate)."""
     import entity_resolution__spark.plans.pipeline as plmod
 
     wh = str(tmp_path_factory.mktemp("warehouse_warm"))
@@ -96,17 +97,67 @@ def test_warm_resume_skips_edge_recompute(
     c1 = r1.clusters.toPandas().sort_values("conv_id").reset_index(drop=True)
 
     calls: list[int] = []
-    orig = plmod.conv_countries
+    orig = plmod.canonicalize
 
     def spy(*a, **k):
         calls.append(1)
         return orig(*a, **k)
 
-    monkeypatch.setattr(plmod, "conv_countries", spy)
+    monkeypatch.setattr(plmod, "canonicalize", spy)
     r2 = run_pipeline(spark, tiny_transcripts_sdf, cfg, store=StageStore(wh))
     c2 = r2.clusters.toPandas().sort_values("conv_id").reset_index(drop=True)
-    assert calls == [], "warm resume re-ran the country-extraction pass"
+    assert calls == [], "warm resume re-ran the conversations pass"
     assert c1.equals(c2)
+
+
+def _python_eval_nodes(df) -> list[str]:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return [ln for ln in plan.splitlines() if "EvalPython" in ln]
+
+
+def test_conversations_one_python_pass(spark):
+    """normalize/tokens, the MinHash signature and the countries are one
+    ArrowEvalPython node over full_text: one Python task per partition."""
+    from entity_resolution__spark.plans.pipeline import build_conversations
+
+    # an input of its own: a cached canonicalize() of a shared fixture
+    # would be substituted into the plan, with its own UDF node
+    sdf = spark.createDataFrame(make_transcripts(seed=3, n_entities=8), schema=TRANSCRIPTS)
+    nodes = _python_eval_nodes(build_conversations(sdf, ERConfig()))
+    assert len(nodes) == 1, nodes
+    assert "ArrowEvalPython" in nodes[0]
+    for udf in ("norm_and_tokens", "minhash_sig", "extract_countries"):
+        assert f"{udf}(full_text" in nodes[0], nodes[0]
+
+
+def test_blocks_and_edges_run_no_python(pipeline_run):
+    """Blocking bands the materialized `sig` column and the geo prune
+    joins the materialized `countries` column: neither plan re-runs a
+    Python UDF over the conversations."""
+    from entity_resolution__spark.plans.pipeline import build_blocks
+
+    res, _ = pipeline_run
+    n_docs = res.conversations.count()
+    blocks = build_blocks(res.conversations, ERConfig(), n_docs=n_docs)
+    assert _python_eval_nodes(blocks) == []
+    assert _python_eval_nodes(res.edges) == []
+    assert _python_eval_nodes(res.dropped) == []
+
+
+def test_stage_flag_stops_after_its_stage(spark, tmp_path, monkeypatch, capsys):
+    """main.py --stage canonicalize commits the conversations stage and
+    nothing after it (it used to run and commit every stage)."""
+    import main as mainmod
+
+    import entity_resolution__spark.session as sessmod
+
+    monkeypatch.setattr(sessmod, "get_spark", lambda *a, **k: spark)
+    wh = str(tmp_path / "wh")
+    argv = ["--synthetic", "20", "--stage", "canonicalize", "--warehouse", wh]
+    assert mainmod.main(argv) == 0
+    assert os.listdir(wh) == ["conversations"]
+    assert StageStore(wh).manifest("conversations")["committed"]
+    assert '"stage": "canonicalize"' in capsys.readouterr().out
 
 
 def test_snapshot_gc_keeps_newest_previous(spark, tmp_path_factory):

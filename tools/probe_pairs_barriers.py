@@ -36,14 +36,17 @@ def main() -> None:
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from entity_resolution__spark.operators.canonicalize import canonicalize
-    from entity_resolution__spark.plans.pipeline import ERConfig, build_blocks
+    from entity_resolution__spark.plans.pipeline import (
+        ERConfig,
+        build_blocks,
+        build_conversations,
+    )
     from entity_resolution__spark.session import get_spark
 
     spark = get_spark("probe-pairs", master=master, shuffle_partitions=shuffle)
     cfg = ERConfig()
     sdf = spark.read.parquet(path)
-    conv = canonicalize(sdf).persist()
+    conv = build_conversations(sdf, cfg).persist()
     n_docs = conv.count()
     blocks = build_blocks(conv, cfg, n_docs=n_docs).persist()
     n_blocks = blocks.count()
